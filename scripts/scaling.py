@@ -40,7 +40,7 @@ def worker(cores: int, docs_path: str, passes: int = 2) -> None:
     from searchengine_spark.index.wand import search_packed
     from searchengine_spark.operators.postings import materialize_index
     from searchengine_spark.operators.search import corpus_constants
-    from searchengine_spark.session import get_spark
+    from searchengine_spark.session import driver_heap_gib, get_spark
     from tests.queries import QUERIES
 
     # cluster-faithful memory model: a 4N-executor cluster brings 4×
@@ -50,8 +50,11 @@ def worker(cores: int, docs_path: str, passes: int = 2) -> None:
     # 6 GiB/core and the large one 1-2 — under-provisioning exactly
     # the level whose concurrent sort/Arrow tasks need it, which shows
     # up as spill only at the high level and biases efficiency down.
+    # Capped by the host's free RAM like the session default (a larger
+    # pre-touched heap gets the JVM OOM-killed); where the cap binds,
+    # per-core memory is no longer equal across levels.
     os.environ.setdefault(
-        "SPARK_DRIVER_MEM", f"{min(6 + 4 * cores, 64)}g"
+        "SPARK_DRIVER_MEM", f"{driver_heap_gib(min(6 + 4 * cores, 64))}g"
     )
     spark = get_spark(f"scale{cores}", master=f"local[{cores}]",
                       shuffle_partitions=cores)

@@ -38,7 +38,12 @@ from pyspark.sql import functions as F
 
 from ..operators.postings import IndexTables
 from ..schemas import BUILD_MANIFEST_SCHEMA as MANIFEST_SCHEMA
-from .segments import n_shards_for
+from .segments import (
+    enrich_postings,
+    n_shards_for,
+    pack_segments_frame,
+    write_by_shard,
+)
 
 
 def manifest_path(base: str) -> str:
@@ -162,12 +167,11 @@ def build_packed_resumable(
         n_groups = 8
     done = completed_groups(spark, base, "pack_segments")
 
-    # shard derives from doc_id alone — computed BEFORE the joins so the
-    # per-group filter prunes the postings scan and each group job joins
-    # only its 1/n_groups slice
-    sharded = index.postings.withColumn(
-        "shard", F.pmod(F.hash("doc_id"), F.lit(n_shards)).cast("int")
-    )
+    # the same enrichment and kernel as build_segments, so a resumable
+    # build's segment rows equal the one-pass build's; shard derives
+    # from doc_id alone, so the per-group shard filter pushes down
+    # through the joins to the postings scan
+    enriched, avgtl = enrich_postings(index, n_docs, n_shards)
 
     # partition-overwrite so a crashed group's partial partitions are
     # replaced, not duplicated, on retry; session value restored after
@@ -179,7 +183,7 @@ def build_packed_resumable(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         _run_groups(
-            spark, base, sharded, index, n_docs, avgdl, n_shards,
+            spark, base, enriched, n_docs, avgdl, avgtl, n_shards,
             n_groups, run_id, done, fail_after_group,
         )
     finally:
@@ -191,31 +195,18 @@ def build_packed_resumable(
 
 
 def _run_groups(
-    spark, base, sharded, index, n_docs, avgdl, n_shards, n_groups,
+    spark, base, enriched, n_docs, avgdl, avgtl, n_shards, n_groups,
     run_id, done, fail_after_group,
 ) -> None:
-    from .segments import INDEX_SEGMENTS_SCHEMA, _pack_group
-
     for g in range(n_groups):
         if g in done:
             continue
         t0 = time.time()
-        grp = (
-            sharded.filter(F.pmod(F.col("shard"), F.lit(n_groups)) == g)
-            .join(index.doc_stats.select("doc_id", "doclen"), "doc_id")
-            .join(index.term_stats.select("term", "df"), "term")
+        segs = pack_segments_frame(
+            enriched.filter(F.pmod(F.col("shard"), F.lit(n_groups)) == g),
+            n_docs, avgdl, run_id, avgtl,
         )
-        segs = grp.groupBy("term", "shard").applyInPandas(
-            lambda pdf: _pack_group(pdf, n_docs, avgdl, run_id),
-            schema=INDEX_SEGMENTS_SCHEMA,
-        )
-        (
-            segs.repartition("shard")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(f"{base}/segments")
-        )
+        write_by_shard(segs, f"{base}/segments", "overwrite")
         # per-group metrics from the freshly written partitions
         # (partition pruning keeps this a metadata-sized read)
         written = spark.read.parquet(f"{base}/segments").filter(

@@ -42,7 +42,7 @@ from pyspark.sql import types as T
 
 from ..functions import textproc
 from . import varbyte as vb
-from .segments import BLOCK
+from .segments import BLOCK, write_by_shard
 
 POSITIONAL_SEGMENTS_SCHEMA = T.StructType(
     [
@@ -173,16 +173,10 @@ def build_positional_segments(
 def write_positional_segments(
     segments: DataFrame, path: str, mode: str = "overwrite"
 ) -> None:
-    """Same layout discipline as write_segments: partition by shard,
-    term-sorted within files so parquet min/max stats prune the
-    phrase-term scan."""
-    (
-        segments.repartition("shard")
-        .sortWithinPartitions("term")
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(path)
-    )
+    """Same layout as the packed segments (segments.write_by_shard):
+    partition by shard, term-sorted within files so parquet min/max
+    stats prune the phrase-term scan."""
+    write_by_shard(segments, path, mode)
 
 
 UNPACKED_POS_SCHEMA = (

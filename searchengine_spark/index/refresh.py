@@ -31,9 +31,9 @@ serializes reindex against maintenance).
 Scale notes (10^12 docs): every step is a bounded shuffle —
 unpack is a zero-shuffle mapInPandas over segment rows; the doc-level
 keep-run map is one groupBy(doc_id); the repack reuses the stored
-shard column (the global doc-space hash partitioning), so the
-applyInPandas groups stay ≤ docs_per_shard postings regardless of term
-skew, same as the cold build.
+shard column (the global doc-space hash partitioning), so each
+(term, shard) pack group stays ≤ docs_per_shard postings regardless of
+term skew, same as the cold build.
 """
 
 from __future__ import annotations
@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..operators.postings import IndexTables, write_index
 from ..schemas import INDEX_SEGMENTS_SCHEMA
-from .segments import _pack_group, unpack_segment
+from .segments import unpack_segment, write_by_shard
 
 UNPACKED_SCHEMA = (
     "term string, shard int, doc_id long, tf long, doclen long, run_id int"
@@ -224,13 +224,7 @@ def refresh_and_repack(
     )
     repacked = pack_segments_frame(enriched, n_docs, avgdl, run_id, avgtl)
     tmp = f"{seg_path}.refreshing"
-    (
-        repacked.repartition("shard")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(tmp)
-    )
+    write_by_shard(repacked, tmp, "overwrite")
     title_side.unpersist()
 
     # the new idx tables still READ from the old idx/segments paths

@@ -30,9 +30,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..operators.fielded import FIELD_B_BODY, FIELD_B_TITLE
 from ..operators.postings import IndexTables
 from ..operators.search import bm25_score_py
 from ..schemas import INDEX_SEGMENTS_SCHEMA
@@ -57,11 +61,12 @@ def n_shards_for(
 
 
 def bm25_scores_np(
-    tfs: np.ndarray, doclens: np.ndarray, df: int, n_docs: int, avgdl: float,
-    k1: float = 1.2, b: float = 0.75,
+    tfs: np.ndarray, doclens: np.ndarray, df: int | np.ndarray, n_docs: int,
+    avgdl: float, k1: float = 1.2, b: float = 0.75,
 ) -> np.ndarray:
     """Vectorized BM25 per-posting scores — float64, same arithmetic as
-    operators.search.bm25_score_py (kept in lockstep)."""
+    operators.search.bm25_score_py (kept in lockstep). `df` is the
+    term's df, or one df per posting."""
     idf = np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
     tf = tfs.astype(np.float64)
     norm = tf + k1 * (1.0 - b + b * doclens.astype(np.float64) / avgdl)
@@ -81,49 +86,87 @@ def _field_norm_np(tfs: np.ndarray, lens: np.ndarray, avg: float,
     return t / (1.0 - b)
 
 
-def _pack_arrays(
-    term, shard: int, doc_ids, tfs, doclens, ttfs, tlens, df_term: int,
-    n_docs: int, avgdl: float, run_id: int, avgtl: float,
-) -> dict:
-    """One (term, shard) group as RAW numpy arrays → one packed segment
-    row as a plain dict — the pandas-free kernel both pack drivers
-    share. A per-group pandas round-trip costs ~1 ms regardless of
-    group size; at a web-corpus dictionary (10^7+ (term, shard) groups)
-    that fixed overhead IS the pack time, so the hot path
-    (pack_segments_frame) batches thousands of these dicts into each
-    Arrow frame instead."""
-    from ..operators.fielded import FIELD_B_BODY, FIELD_B_TITLE
+_SEGMENTS_ARROW = to_arrow_schema(INDEX_SEGMENTS_SCHEMA)
+_LIST_I32 = _SEGMENTS_ARROW.field("block_off_ids").type
+_LIST_I64 = _SEGMENTS_ARROW.field("block_last_doc").type
+_LIST_F64 = _SEGMENTS_ARROW.field("block_max_score").type
+_LIM = np.int64(1) << np.int64(31)
 
-    order = np.argsort(doc_ids, kind="stable")
-    doc_ids = doc_ids[order].astype(np.int64)
-    tfs = tfs[order].astype(np.int64)
-    doclens = doclens[order].astype(np.int64)
-    ttfs = ttfs[order].astype(np.int64)
-    tlens = tlens[order].astype(np.int64)
-    scores = bm25_scores_np(tfs, doclens, df_term, n_docs, avgdl)
+
+def _group_starts(terms: pa.Array, shards: np.ndarray) -> np.ndarray:
+    """Row indices where a (term, shard) group starts in non-empty
+    key-sorted rows — row 0 included; one vectorized change-point
+    scan."""
+    n = len(shards)
+    ne = pc.not_equal(terms.slice(1), terms.slice(0, n - 1))
+    change = ne.to_numpy(zero_copy_only=False) | (shards[1:] != shards[:-1])
+    return np.concatenate(([0], np.flatnonzero(change) + 1))
+
+
+def _offsets32(cum: np.ndarray) -> pa.Buffer:
+    """int64 byte/element offsets → the int32 buffer Arrow's binary and
+    list layouts take (Spark's BinaryType/ArrayType are the 32-bit
+    forms); a stream past 2 GiB would wrap silently, so refuse it."""
+    if cum.size and int(cum[-1]) > np.iinfo(np.int32).max:
+        raise ValueError("packed batch exceeds 2 GiB in one stream")
+    return pa.py_buffer(cum.astype(np.int32))
+
+
+def _pack_sorted(rows: pa.RecordBatch, n_docs: int, avgdl: float,
+                 run_id: int, avgtl: float) -> pa.RecordBatch:
+    """Every (term, shard) group of `rows` → one packed segment row per
+    group, in ONE vectorized pass — the single pack kernel.
+
+    `rows` is the pack shuffle layout (term, shard, doc_id, df, tfx,
+    dlx; see pack_segments_frame), sorted by (term, shard, doc_id) and
+    holding only COMPLETE groups. No Python runs per group: scores and
+    field norms are computed over the whole batch, block maxima come
+    from one reduceat over the block starts, docID gaps reset at each
+    group start, and each varbyte stream is encoded once — the group
+    and per-block byte offsets fall out of its cumulative byte lengths,
+    and the output columns are Arrow arrays built on those offsets. A
+    group's df is its first row's (df is per term, so every row agrees).
+    """
+    terms = rows.column("term")
+    shards = rows.column("shard").to_numpy()
+    gstart = _group_starts(terms, shards)
+    n = rows.num_rows
+    n_groups = gstart.size
+    gsize = np.diff(np.append(gstart, n))
+    doc_ids = rows.column("doc_id").to_numpy()
+    df = rows.column("df").to_numpy()[gstart]
+    tfx = rows.column("tfx").to_numpy()
+    dlx = rows.column("dlx").to_numpy()
+    tfs, ttfs = tfx >> 31, tfx & (_LIM - 1)
+    doclens, tlens = dlx >> 31, dlx & (_LIM - 1)
+
+    scores = bm25_scores_np(tfs, doclens, np.repeat(df, gsize), n_docs, avgdl)
     bnorm = _field_norm_np(tfs, doclens, avgdl, FIELD_B_BODY)
     tnorm = _field_norm_np(ttfs, tlens, avgtl, FIELD_B_TITLE)
-    n = len(doc_ids)
-    n_blocks = -(-n // BLOCK)
-    starts = np.arange(n_blocks, dtype=np.int64) * BLOCK
-    # block stats vectorized: reduceat segments exactly at block
-    # starts (the trailing partial block is reduceat's natural tail),
-    # fancy-index for each block's last docID — the per-block Python
-    # loops this replaces were ~25× slower and ran 4× per group
-    block_last = doc_ids[np.minimum(starts + BLOCK, n) - 1].tolist()
-    block_max = np.maximum.reduceat(scores, starts).tolist() if n else []
-    block_bn = np.maximum.reduceat(bnorm, starts).tolist() if n else []
-    block_tn = np.maximum.reduceat(tnorm, starts).tolist() if n else []
 
-    # per-block byte offsets into each varbyte stream (lazy decode);
-    # lengths computed once per stream and reused by the encoder
+    # blocks: BLOCK postings from each group start, the last one partial;
+    # block starts are increasing and tile the batch, so reduceat over
+    # them is exactly the per-block max
+    nblk = -(-gsize // BLOCK)
+    blk_cum = np.concatenate(([0], np.cumsum(nblk)))
+    bgroup = np.repeat(np.arange(n_groups), nblk)
+    bstart = gstart[bgroup] + (
+        np.arange(blk_cum[-1]) - blk_cum[bgroup]
+    ) * BLOCK
+    bend = np.minimum(bstart + BLOCK, (gstart + gsize)[bgroup])
+    blk_offsets = _offsets32(blk_cum)
+
+    def per_block(values: np.ndarray, typ: pa.DataType) -> pa.Array:
+        return pa.Array.from_buffers(
+            typ, n_groups, [None, blk_offsets],
+            children=[pa.array(values, type=typ.value_type)],
+        )
+
     u = vb.to_u64(doc_ids)
     gaps = np.empty_like(u)
-    if n:
-        gaps[0] = u[0]
-        gaps[1:] = u[1:] - u[:-1]
-    enc = {}
-    offs = {}
+    gaps[1:] = u[1:] - u[:-1]  # wraps across group starts; reset below
+    gaps[gstart] = u[gstart]
+    streams = {}
     for key, vals in (
         ("ids", gaps), ("tfs", tfs.astype(np.uint64)),
         ("dls", doclens.astype(np.uint64)),
@@ -131,54 +174,75 @@ def _pack_arrays(
     ):
         lens = vb.varbyte_lengths(vals)
         cum = np.concatenate(([0], np.cumsum(lens)))
-        offs[key] = cum[starts].tolist()
-        enc[key] = vb.varbyte_encode(vals, nbytes=lens)
+        data = pa.py_buffer(vb.varbyte_encode(vals, nbytes=lens))
+        encoded = pa.Array.from_buffers(
+            pa.binary(), n_groups,
+            [None, _offsets32(cum[np.append(gstart, n)]), data],
+        )
+        offs = per_block(cum[bstart] - cum[gstart[bgroup]], _LIST_I32)
+        streams[key] = (encoded, offs)
 
-    return {
-        "term": term,
-        "shard": int(shard),
-        "run_id": run_id,
-        "n_docs": n,
-        "df": df_term,
-        "doc_ids": enc["ids"],
-        "tfs": enc["tfs"],
-        "doclens": enc["dls"],
-        "block_last_doc": block_last,
-        "block_max_score": block_max,
-        "block_off_ids": offs["ids"],
-        "block_off_tfs": offs["tfs"],
-        "block_off_dls": offs["dls"],
-        "tfs_title": enc["ttf"],
-        "title_lens": enc["tls"],
-        "block_off_ttf": offs["ttf"],
-        "block_off_tls": offs["tls"],
-        "block_max_bnorm": block_bn,
-        "block_max_tnorm": block_tn,
-        "avgtl": float(avgtl),
+    cols = {
+        "term": terms.take(pa.array(gstart)),
+        "shard": pa.array(shards[gstart], pa.int32()),
+        "run_id": pa.array(np.full(n_groups, run_id, dtype=np.int32)),
+        "n_docs": pa.array(gsize.astype(np.int32)),
+        "df": pa.array(df.astype(np.int64)),
+        "doc_ids": streams["ids"][0],
+        "tfs": streams["tfs"][0],
+        "doclens": streams["dls"][0],
+        "block_last_doc": per_block(doc_ids[bend - 1], _LIST_I64),
+        "block_max_score": per_block(
+            np.maximum.reduceat(scores, bstart), _LIST_F64),
+        "block_off_ids": streams["ids"][1],
+        "block_off_tfs": streams["tfs"][1],
+        "block_off_dls": streams["dls"][1],
+        "tfs_title": streams["ttf"][0],
+        "title_lens": streams["tls"][0],
+        "block_off_ttf": streams["ttf"][1],
+        "block_off_tls": streams["tls"][1],
+        "block_max_bnorm": per_block(
+            np.maximum.reduceat(bnorm, bstart), _LIST_F64),
+        "block_max_tnorm": per_block(
+            np.maximum.reduceat(tnorm, bstart), _LIST_F64),
+        "avgtl": pa.array(np.full(n_groups, float(avgtl))),
     }
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] for f in _SEGMENTS_ARROW], schema=_SEGMENTS_ARROW
+    )
 
 
 def _pack_group(pdf: pd.DataFrame, n_docs: int, avgdl: float, run_id: int,
                 avgtl: float = 0.0) -> pd.DataFrame:
     """One (term, shard) group of (doc_id, tf, doclen, df[, ttf, tlen])
-    → one packed segment row (applyInPandas shape — kept for the
-    multi-run merge and the kernel tests; the bulk pack path is
-    pack_segments_frame). ttf/tlen (title-field tf and title length,
-    absent → zeros) feed the per-field TF layer that serves BM25F."""
+    → one packed segment row: the one-group case of _pack_sorted
+    (applyInPandas shape — the multi-run merge and the kernel tests;
+    the bulk pack path is pack_segments_frame). ttf/tlen (title-field
+    tf and title length, absent → zeros) feed the per-field TF layer
+    that serves BM25F."""
+    pdf = pdf.sort_values("doc_id", kind="stable")
     n = len(pdf)
-    if "ttf" in pdf.columns:
-        ttfs = pdf["ttf"].to_numpy()
-        tlens = pdf["tlen"].to_numpy()
-    else:
-        ttfs = np.zeros(n, dtype=np.int64)
-        tlens = np.zeros(n, dtype=np.int64)
-    row = _pack_arrays(
-        pdf["term"].iloc[0], int(pdf["shard"].iloc[0]),
-        pdf["doc_id"].to_numpy(), pdf["tf"].to_numpy(),
-        pdf["doclen"].to_numpy(), ttfs, tlens,
-        int(pdf["df"].iloc[0]), n_docs, avgdl, run_id, avgtl,
+    fielded = "ttf" in pdf.columns
+    ttf = pdf["ttf"].to_numpy(np.int64) if fielded else np.zeros(n, np.int64)
+    tlen = pdf["tlen"].to_numpy(np.int64) if fielded else np.zeros(n, np.int64)
+    rows = pa.RecordBatch.from_pydict({
+        "term": pa.array([pdf["term"].iloc[0]] * n, pa.string()),
+        "shard": pa.array(np.full(n, int(pdf["shard"].iloc[0]), np.int32)),
+        "doc_id": pa.array(pdf["doc_id"].to_numpy(np.int64)),
+        "df": pa.array(np.full(n, int(pdf["df"].iloc[0]), np.int64)),
+        "tfx": pa.array(pdf["tf"].to_numpy(np.int64) * _LIM + ttf),
+        "dlx": pa.array(pdf["doclen"].to_numpy(np.int64) * _LIM + tlen),
+    })
+    return pd.DataFrame(
+        _pack_sorted(rows, n_docs, avgdl, run_id, avgtl).to_pylist()
     )
-    return pd.DataFrame([row])
+
+
+def _concat(chunks: list[pa.RecordBatch]) -> pa.RecordBatch:
+    """Record batches of one schema → one contiguous batch."""
+    if len(chunks) == 1:
+        return chunks[0]
+    return pa.Table.from_batches(chunks).combine_chunks().to_batches()[0]
 
 
 def pack_segments_frame(
@@ -189,29 +253,24 @@ def pack_segments_frame(
     avgtl: float,
 ) -> DataFrame:
     """Bulk pack: (term, shard, doc_id, tf, doclen, df, ttf, tlen) →
-    packed segment rows, ONE Arrow frame per ~thousands of groups.
+    packed segment rows, at most one output Arrow batch per input batch.
 
     groupBy(term, shard).applyInPandas pays a fixed ~1 ms pandas/Arrow
-    round-trip PER GROUP — negligible for a small dictionary, but the
-    dominant cost at a realistic one (measured 69 s for a 20k-word
-    Zipf corpus at 10k docs: ~50k groups of fixed overhead). Here the
-    same co-location is achieved with ONE hash repartition on
-    (term, shard) + an in-partition sort, and a mapInPandas pass walks
-    each sorted partition, slicing group boundaries with numpy and
-    emitting plain dicts — the per-group cost drops to the numpy body.
+    round-trip PER GROUP, and even a per-group numpy kernel pays
+    ~160 µs of call overhead — at a Zipf dictionary most groups hold a
+    single posting, so that overhead IS the pack time. Here ONE hash
+    repartition on (term, shard) + an in-partition sort co-locate each
+    group, and a mapInArrow pass hands every complete group of a batch
+    to _pack_sorted at once: no Python runs per group.
 
     Correctness of the stitching: a (term, shard) group never spans
     partitions (hash partitioning on exactly that key), but CAN span
-    consecutive Arrow batches of one partition — the walker carries
-    the trailing (possibly incomplete) group of every batch forward
-    as a LIST of chunks and concatenates once, when the group closes
-    (or at iterator end). Total row copies stay O(partition rows)
-    even when one group spans many Arrow batches — the previous
-    concat-carry-into-next-batch design recopied an open group once
-    per batch it spanned (quadratic in group size at the default 10k
-    Arrow batch rows), and its Python backward walk to find the
-    trailing boundary cost O(carried rows) of interpreter loop per
-    batch; boundaries now come from one vectorized change-point scan.
+    consecutive Arrow batches of one partition — the walker packs each
+    batch up to its last group start and carries the trailing
+    (possibly incomplete) group forward as a LIST of chunks, joined
+    once with the next batch's complete groups (or at iterator end).
+    Every row is copied O(1) times even when one group spans many
+    batches.
 
     Shuffle width: the two field-layer ints ride PACKED into the body
     ints (tfx = tf·2³¹ + ttf, dlx = doclen·2³¹ + tlen — exact while
@@ -219,82 +278,40 @@ def pack_segments_frame(
     extraction invariant guarantees: title text ⊆ body text), so the
     exchange and the Arrow hop into Python carry the SAME six columns
     the field-free r4 layout did; the kernel splits with two shifts."""
-    _LIM = np.int64(1) << np.int64(31)
 
     def run(batches):
-        # chunks of the currently-open trailing group (term/shard of
-        # every row in every chunk is identical); concatenated exactly
-        # once, when the group closes
-        carry: list[pd.DataFrame] = []
-
-        def pack_one(pdf: pd.DataFrame, a: int, b: int) -> dict:
-            tfx = pdf["tfx"].to_numpy()[a:b]
-            dlx = pdf["dlx"].to_numpy()[a:b]
-            return _pack_arrays(
-                pdf["term"].iat[a], int(pdf["shard"].iat[a]),
-                pdf["doc_id"].to_numpy()[a:b], tfx >> 31,
-                dlx >> 31, tfx & (_LIM - 1), dlx & (_LIM - 1),
-                int(pdf["df"].iat[a]), n_docs, avgdl, run_id, avgtl,
-            )
-
-        def flush_carry() -> dict | None:
-            nonlocal carry
-            if not carry:
-                return None
-            whole = (
-                carry[0] if len(carry) == 1
-                else pd.concat(carry, ignore_index=True)
-            )
-            carry = []
-            return pack_one(whole, 0, len(whole))
-
-        for pdf in batches:
-            if not len(pdf):
+        pending: list[pa.RecordBatch] = []  # rows not yet packed
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            terms = pdf["term"].to_numpy()
-            shards = pdf["shard"].to_numpy()
-            change = np.flatnonzero(
-                (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-            ) + 1
-            rows = []
-            if carry and (
-                terms[0] != carry[0]["term"].iat[0]
-                or shards[0] != carry[0]["shard"].iat[0]
-            ):
-                # batch opens a NEW group — the carried one is complete
-                rows.append(flush_carry())
-            if carry:
-                if change.size == 0:
-                    # whole batch continues the open group
-                    carry.append(pdf)
-                    if rows:
-                        yield pd.DataFrame(rows)
+            starts = _group_starts(
+                rb.column("term"), rb.column("shard").to_numpy()
+            )
+            cut = int(starts[-1])
+            if cut == 0 and pending:
+                last = pending[-1]
+                if (
+                    rb.column("term")[0].as_py()
+                    == last.column("term")[-1].as_py()
+                    and rb.column("shard")[0].as_py()
+                    == last.column("shard")[-1].as_py()
+                ):
+                    pending.append(rb)  # the open group continues
                     continue
-                # open group closes at the first boundary
-                head = int(change[0])
-                carry.append(pdf.iloc[:head])
-                rows.append(flush_carry())
-            else:
-                head = 0
-            # complete groups fully inside this batch; the trailing
-            # (possibly incomplete) one becomes the new carry
-            starts = np.concatenate(([head], change[change > head]))
-            for a, b in zip(starts[:-1], starts[1:]):
-                rows.append(pack_one(pdf, int(a), int(b)))
-            carry.append(pdf.iloc[int(starts[-1]):])
-            if rows:
-                yield pd.DataFrame(rows)
-        tail = flush_carry()
-        if tail is not None:
-            yield pd.DataFrame([tail])
+            if cut or pending:
+                yield _pack_sorted(
+                    _concat(pending + [rb.slice(0, cut)]),
+                    n_docs, avgdl, run_id, avgtl,
+                )
+            pending = [rb.slice(cut)]
+        if pending:
+            yield _pack_sorted(_concat(pending), n_docs, avgdl, run_id, avgtl)
 
     # in-partition sort groups rows; the partitioner guarantees group
     # locality. The sort is the same work applyInPandas' group shuffle
-    # did implicitly — no extra pass. doc_id rides as a THIRD sort key
-    # so the kernel's stable argsort sees presorted input (its merge
-    # fast path: ~85 µs vs ~7 ms on 75k random int64) — the Tungsten
-    # sort adds the key for near-free, the Python side saves the
-    # single most expensive line of the group kernel.
+    # did implicitly — no extra pass. doc_id rides as a THIRD sort key:
+    # the kernel needs each group's postings in docID order, and the
+    # Tungsten sort adds the key for near-free.
     lim = F.lit(1 << 31).cast("long")
     has_field = "ttf" in enriched.columns
     ttf_col = (
@@ -313,7 +330,7 @@ def pack_segments_frame(
     return (
         packed_in.repartition("term", "shard")
         .sortWithinPartitions("term", "shard", "doc_id")
-        .mapInPandas(run, schema=INDEX_SEGMENTS_SCHEMA)
+        .mapInArrow(run, schema=INDEX_SEGMENTS_SCHEMA)
     )
 
 
@@ -405,6 +422,24 @@ def build_segments(
     if n_shards is None:
         par = index.postings.sparkSession.sparkContext.defaultParallelism
         n_shards = n_shards_for(n_docs, min_parallelism=par)
+    enriched, avgtl = enrich_postings(
+        index, n_docs, n_shards, title_tf, title_len, avgtl
+    )
+    return pack_segments_frame(enriched, n_docs, avgdl, run_id, avgtl)
+
+
+def enrich_postings(
+    index: IndexTables,
+    n_docs: int,
+    n_shards: int,
+    title_tf: DataFrame | None = None,
+    title_len: DataFrame | None = None,
+    avgtl: float | None = None,
+) -> tuple[DataFrame, float]:
+    """postings → the pack input (term, shard, doc_id, tf, doclen, df,
+    ttf, tlen) plus the corpus avgtl — the enrichment every full build
+    (build_segments, manifest.build_packed_resumable) shares; see
+    build_segments for the title-field sources."""
     # In-row fast path: a materialize_index-built index already carries
     # the field layer (postings.ttf from the single extraction pass,
     # doc_stats.tlen from the doclen aggregation) — the title data then
@@ -458,19 +493,30 @@ def build_segments(
     enriched = enriched.withColumn(
         "shard", F.pmod(F.hash("doc_id"), F.lit(n_shards)).cast("int")
     )
-    return pack_segments_frame(enriched, n_docs, avgdl, run_id, avgtl)
+    return enriched, avgtl
 
 
-def write_segments(segments: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Partition by shard; sort by term within files so parquet min/max
-    column stats prune query-term scans."""
+def write_by_shard(frame: DataFrame, path: str, mode: str) -> None:
+    """The one writer of every shard-partitioned index layer (packed and
+    positional segments, bulk, delta, resumable and repacked):
+    partition by shard, rows term-sorted within each file so parquet
+    min/max column stats prune query-term scans. `shard` leads the sort
+    because partitionBy's planned write requires that ordering — a sort
+    on `term` alone is replaced by one on `shard`, and the files come
+    out in shuffle order (their bytes then depend on upstream
+    partitioning too)."""
     (
-        segments.repartition("shard")
-        .sortWithinPartitions("term")
+        frame.repartition("shard")
+        .sortWithinPartitions("shard", "term")
         .write.mode(mode)
         .partitionBy("shard")
         .parquet(path)
     )
+
+
+def write_segments(segments: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write packed segments under `path` (write_by_shard layout)."""
+    write_by_shard(segments, path, mode)
 
 
 def unpack_segment(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -577,12 +623,7 @@ def write_delta_run(
             delta_prepared, term_stats, n_docs=n_docs, avgdl=avgdl,
             n_shards=n_shards, run_id=run_id, avgtl=avgtl,
         )
-        (
-            delta.repartition("shard")
-            .write.mode("append")
-            .partitionBy("shard")
-            .parquet(f"{index_base}/segments")
-        )
+        write_by_shard(delta, f"{index_base}/segments", "append")
         title = (
             F.col("title") if "title" in delta_prepared.columns
             else F.lit(None).cast("string")

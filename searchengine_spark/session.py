@@ -9,11 +9,34 @@ timestamps compare bit-stable against external oracles.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_log = logging.getLogger(__name__)
+
+
+def driver_heap_gib(wanted_gib: int) -> int:
+    """`wanted_gib`, capped at 40% of the RAM the host has available
+    (MemAvailable) when the session starts. The heap is pre-touched
+    (Xms = Xmx), so all of it is resident from start-up; the rest is
+    left to the JVM's off-heap, the Python workers, a tmpfs shuffle
+    and any JVM already running beside this one (a second session in
+    a subprocess sees the first one's heap as used). A core-derived
+    heap alone got the JVM OOM-killed on a 4-core, 16 GiB host.
+    Without /proc/meminfo the wanted size stands."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    cap_gib = int(line.split()[1]) * 2 // 5 // 2**20
+                    return max(1, min(wanted_gib, cap_gib))
+    except OSError:
+        pass
+    return wanted_gib
 
 
 def get_spark(
@@ -35,7 +58,11 @@ def get_spark(
         n_cores = int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
     except ValueError:
         n_cores = 32
-    _driver_mem = os.environ.get("SPARK_DRIVER_MEM", f"{max(12, n_cores)}g")
+    _driver_mem = (
+        os.environ.get("SPARK_DRIVER_MEM")
+        or f"{driver_heap_gib(max(12, n_cores))}g"
+    )
+    _log.info("driver heap %s", _driver_mem)
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(sp))
@@ -49,10 +76,11 @@ def get_spark(
         # straggler loss, and each Python worker holds a smaller batch
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
         # heap ∝ concurrent tasks (local mode: driver == executor) —
-        # ~1 GB/core. Undersized heaps GC-thrash once 32 tasks sort
-        # concurrently; oversized LAZILY-committed heaps stall mid-job
-        # under this hypervisor, so Xms=Xmx + AlwaysPreTouch moves the
-        # commit cost to (untimed) session startup
+        # ~1 GB/core, capped by the host's free RAM (driver_heap_gib).
+        # Undersized heaps GC-thrash once 32 tasks sort concurrently;
+        # oversized LAZILY-committed heaps stall mid-job under this
+        # hypervisor, so Xms=Xmx + AlwaysPreTouch moves the commit
+        # cost to (untimed) session startup
         .config("spark.driver.memory", _driver_mem)
         .config("spark.driver.extraJavaOptions",
                 f"-Xms{_driver_mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC")

@@ -13,7 +13,7 @@ from searchengine_spark.index.manifest import (
     read_manifest,
 )
 from searchengine_spark.index.segments import build_segments
-from searchengine_spark.operators.postings import build_index
+from searchengine_spark.operators.postings import build_index, materialize_index
 from searchengine_spark.operators.search import corpus_constants
 from searchengine_spark.sources.corpus import corpus_df
 
@@ -108,3 +108,36 @@ def test_read_manifest_resolves_uri_paths(spark, index, tmp_path):
     assert plain.count() == via_uri.count() > 0
     # and a genuinely absent URI base still reads as empty, not an error
     assert read_manifest(spark, f"file:{tmp_path}/nope").count() == 0
+
+
+def test_resumable_equals_build_segments_over_materialized_index(
+    spark, tmp_path
+):
+    """Over a materialize_index index (doclen, ttf and tlen in-row) the
+    resumable build packs through build_segments' enrichment: it does
+    not trip over the in-row doclen, and every segment row — the BM25F
+    title layer included — equals build_segments' row."""
+    idx = materialize_index(
+        spark, corpus_df(spark, 200), str(tmp_path / "idx"), use_html=True
+    )
+    n, avgdl = corpus_constants(idx.doc_stats)
+    segs = build_packed_resumable(
+        spark, idx, str(tmp_path / "build"), n, avgdl,
+        n_shards=N_SHARDS, n_groups=N_GROUPS,
+    )
+    oneshot = build_segments(idx, n, avgdl, n_shards=N_SHARDS)
+
+    def rows(df):
+        return sorted(
+            tuple(
+                bytes(v) if isinstance(v, (bytes, bytearray))
+                else tuple(v) if isinstance(v, list) else v
+                for v in r
+            )
+            for r in df.select(*oneshot.columns).collect()
+        )
+
+    got, want = rows(segs), rows(oneshot)
+    assert len(got) == len(want) > 0
+    assert got == want
+    assert any(r[oneshot.columns.index("avgtl")] > 0 for r in want)

@@ -258,9 +258,9 @@ def test_wand_allow_and_deny_compose(seed, conjunctive, pct_a, pct_e):
 def test_bulk_pack_equals_group_pack_with_tiny_arrow_batches(
     spark, corpus_small
 ):
-    """pack_segments_frame (one hash repartition + sorted mapInPandas
-    walk — the bulk path that removes the ~1 ms/group pandas overhead
-    applyInPandas pays) is BYTE-identical to the per-group kernel,
+    """pack_segments_frame (one hash repartition + sorted mapInArrow
+    walk over the batched kernel) is BYTE-identical to the per-group
+    reference kernel (tests/pack_reference.py) for every row,
     including when (term, shard) groups span Arrow batch boundaries —
     forced here with maxRecordsPerBatch=7 so nearly every group is
     carry-stitched across batches."""
@@ -269,7 +269,7 @@ def test_bulk_pack_equals_group_pack_with_tiny_arrow_batches(
     from searchengine_spark.index import segments as SG
     from searchengine_spark.operators import postings as P
     from searchengine_spark.operators import search as S
-    from searchengine_spark.schemas import INDEX_SEGMENTS_SCHEMA
+    from tests import pack_reference as R
 
     idx = P.build_index(corpus_small.limit(120), use_html=True)
     n, avgdl = S.corpus_constants(idx.doc_stats)
@@ -289,10 +289,8 @@ def test_bulk_pack_equals_group_pack_with_tiny_arrow_batches(
          tuple(r["block_off_ids"]), tuple(r["block_off_tfs"]),
          tuple(r["block_off_dls"]), tuple(r["block_off_ttf"]),
          tuple(r["block_off_tls"]), r["avgtl"], r["df"], r["n_docs"])
-        for r in enriched.groupBy("term", "shard").applyInPandas(
-            lambda pdf: SG._pack_group(pdf, n, avgdl, 0, avgtl=avgtl),
-            schema=INDEX_SEGMENTS_SCHEMA,
-        ).collect()
+        for _, g in enriched.toPandas().groupby(["term", "shard"])
+        for r in [R.pack_group(g, n, avgdl, 0, avgtl=avgtl).iloc[0]]
     )
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key, "10000")
